@@ -321,7 +321,7 @@ def build_score_fixture(fixture_dir: str, n_records: int) -> None:
     spark.stop()
 
 
-def run_score_worker(cpus: int, fixture_dir: str, strategy: str = "auto") -> None:
+def run_score_worker(cpus: int, fixture_dir: str) -> None:
     """One scoring-throughput point: hydrate + ALL 20 features +
     classify + aggregate over the pre-built fixture. This IS the
     BASELINE 'pairs-scored/sec' workload.
@@ -388,9 +388,7 @@ def run_score_worker(cpus: int, fixture_dir: str, strategy: str = "auto") -> Non
         # Arrow node and blows the JVM 64KB codegen method limit.
         # The aggregate sums confidence AND each extra feature, so
         # nothing in the 20-feature set can be pruned from the plan.
-        featured = features.staged_feature_matrix(
-            c, wide, dim=cfg.embedding_dim, cosine_strategy=strategy
-        )
+        featured = features.staged_feature_matrix(c, wide, dim=cfg.embedding_dim)
         df = classify.classify_pairs(
             featured,
             classify.Model.golden(),
@@ -745,13 +743,9 @@ if __name__ == "__main__":
             n_rec = int(sys.argv[sys.argv.index("--er-records") + 1])
         run_er_worker(int(sys.argv[sys.argv.index("--er-worker") + 1]), n_rec)
     elif "--score-worker" in sys.argv:
-        strat = "auto"
-        if "--strategy" in sys.argv:
-            strat = sys.argv[sys.argv.index("--strategy") + 1]
         run_score_worker(
             int(sys.argv[sys.argv.index("--score-worker") + 1]),
             sys.argv[sys.argv.index("--fixture-dir") + 1],
-            strat,
         )
     elif "--build-fixture" in sys.argv:
         i = sys.argv.index("--build-fixture")

@@ -648,9 +648,12 @@ def embedding_near_dup(
     join is per-bucket (LSH-style, per-pair expression cosine on the
     bucket-bounded candidates); without it the exact O(n²) computation
     runs through the sharded-GEMM plan (simsearch.
-    allpairs_threshold_gemm — same rows as the old crossJoin +
-    unrolled-dot shape, measured 39.2s → ~2s at sf0.1, verified
-    md5-identical at sf0.001/0.01/0.1)."""
+    allpairs_threshold_gemm, measured 39.2s → ~2s at sf0.1 against the
+    old crossJoin + unrolled-dot shape). Its rows match that expression
+    path up to float64 summation-order ulps: a BLAS dot sums in a
+    different order than the left-to-right expression, so a pair whose
+    cosine lies within a few ulps of ``cosine_threshold`` can fall on
+    the other side of it."""
     from .simsearch import _fused_dim, _probe_dim, allpairs_threshold_gemm
 
     if not group_col:

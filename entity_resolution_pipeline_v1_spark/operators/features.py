@@ -4,8 +4,12 @@ Feature order and semantics pinned to the reference
 (output/summary_report.json:34-50, constructed src/features.py:92-136):
 five embedding cosines, person Levenshtein, six harmonic-mean
 interactions, one product, one ratio. Missing vector => 0.0
-(src/features.py:158-159). Cosines are the only pandas-UDF work;
-everything else is whole-stage-codegen column expressions.
+(src/features.py:158-159).
+
+staged_feature_matrix is the one production path (the score stage,
+incremental attach, training and the labeled-pair report);
+with_features + with_extra_features over hydrate_pairs is the
+independent reference the parity tests compare it against.
 """
 
 from __future__ import annotations
@@ -35,8 +39,9 @@ ALL_FEATURE_NAMES: tuple[str, ...] = FEATURE_NAMES + EXTRA_FEATURE_NAMES
 
 def hydrate_pairs(pairs: DataFrame, wide: DataFrame) -> DataFrame:
     """pairs(id1,id2) ⋈ records_wide twice -> one row per pair with
-    l_*/r_* field strings and vectors. Two shuffle joins on record_id;
-    at scale pre-bucket records_wide by record_id to make them co-located.
+    l_*/r_* field strings and vectors. Input of the reference feature
+    functions below (with_features + with_extra_features); production
+    scoring hydrates in two skinny phases inside staged_feature_matrix.
     """
     lcols = [F.col("record_id").alias("id1")] + [
         F.col(c).alias(f"l_{c}") for c in wide.columns if c != "record_id"
@@ -47,23 +52,20 @@ def hydrate_pairs(pairs: DataFrame, wide: DataFrame) -> DataFrame:
     return pairs.join(wide.select(*lcols), on="id1").join(wide.select(*rcols), on="id2")
 
 
-def with_features(hydrated: DataFrame, use_expr_cosine: bool = False) -> DataFrame:
+def with_features(hydrated: DataFrame) -> DataFrame:
     """Append the 14 feature columns in reference order.
 
-    Cosines default to the Arrow-batched pandas UDF (one numpy einsum
-    per batch): measured on this runtime, interpreted higher-order
-    functions (zip_with/aggregate) serialize badly under many executor
-    threads, while the Arrow path scales linearly with cores. The
-    expression variant (`use_expr_cosine=True`) produces identical
-    values (tested) and avoids Python workers entirely — right for
-    low-parallelism or Python-starved environments.
+    The reference implementation: the parity tests compare
+    staged_feature_matrix against
+    with_extra_features(with_features(hydrate_pairs(...))).
+    Cosines are the true-norm Arrow UDF over per-pair vectors, not the
+    production plan's unit-norm dot products.
     """
-    cos = S.cosine_expr if use_expr_cosine else S.cosine_udf
     df = hydrated
     for f in EMBED_FIELDS:
         df = df.withColumn(
             f"{f}_cosine",
-            F.coalesce(cos(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec")), F.lit(0.0)),
+            F.coalesce(S.cosine_udf(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec")), F.lit(0.0)),
         )
     df = df.withColumn("person_levenshtein", S.levenshtein_sim("l_person", "r_person"))
     for a, b in [
@@ -91,7 +93,9 @@ def with_features(hydrated: DataFrame, use_expr_cosine: bool = False) -> DataFra
 def with_extra_features(df: DataFrame) -> DataFrame:
     """Append the north-rule extras. Jaro-Winkler is the one pandas
     UDF; Jaccard and year-match are native expressions over tokens and
-    the extracted-year structs."""
+    the extracted-year structs. Part of the reference implementation (see
+    with_features): it normalizes and tokenizes per pair side instead
+    of reading the per-record columns records_wide precomputes."""
     ln = TX.normalize_name("l_person")
     rn = TX.normalize_name("r_person")
     df = df.withColumn(
@@ -146,23 +150,8 @@ def with_extra_features(df: DataFrame) -> DataFrame:
     return df
 
 
-def unit_dot_expr(a, b, dim: int) -> "F.Column":
-    """Flattened fixed-dim dot product: Σ a[i]*b[i] written out as
-    `dim` getItem terms. Fully whole-stage-codegen'd — no interpreted
-    higher-order-function lambdas in the per-pair hot path. Equals
-    cosine similarity when both vectors are UNIT-NORM (the embedder
-    contract, functions/embedder.py L2-normalizes every vector).
-    NULL vector on either side -> NULL (callers coalesce to 0.0).
-
-    Measured on the 6.5M-pair fixture at local[8]: 5 cosines via the
-    zip_with/aggregate HOF form run 81s (interpreted, re-traverses the
-    arrays for the norms); the flattened dot runs 22s inside one
-    WholeStageCodegen span."""
-    return S.unrolled_dot_expr(a, b, dim)
-
-
-# Above this dimensionality the unrolled unit_dot_expr stops being the
-# right cosine plan: 5 cosines x dim multiply-add terms approaches the
+# Above this dimensionality the unrolled S.unrolled_dot_expr stops being
+# the right cosine plan: 5 cosines x dim multiply-add terms approaches the
 # JVM's 64KB-per-method codegen budget, Spark splits the generated
 # code into non-inlined expression methods, and throughput collapses
 # below the Arrow einsum path. Measured on this runtime (2.5M-pair
@@ -171,127 +160,6 @@ def unit_dot_expr(a, b, dim: int) -> "F.Column":
 # 256 keeps the whole 5-cosine projection comfortably inside one
 # whole-stage-codegen span (5*256 = 1280 terms).
 FUSED_COSINE_MAX_DIM = 256
-
-
-def with_all_features(
-    hydrated: DataFrame, fused: bool = True, dim: int = 64
-) -> DataFrame:
-    """The full 14+extras feature set. ``fused=True`` is the
-    scale-tuned path: cosines are codegen'd flat dot products over the
-    unit-norm vectors (see unit_dot_expr), and the only Arrow transit
-    is Jaro-Winkler over two SHORT STRINGS per pair.
-
-    Why not a vector pandas UDF: shipping the ten 64-float vector
-    columns per pair through Arrow makes the JVM serializer the
-    bottleneck and it degrades with thread count — measured on the
-    2.5M-pair fixture the vector-UDF variant runs 117s at local[32] vs
-    11s for expression cosines + string-only JW. (The round-1 claim
-    that expression cosines contend under many threads was an artifact
-    of BLAS thread oversubscription in the Python workers — see
-    session.py.) Values match with_extra_features(with_features(...))
-    to float32-normalization precision (~1e-6) — tested."""
-    if not fused:
-        return with_extra_features(with_features(hydrated))
-    # prefer the per-record precomputed inputs from records_wide (one
-    # evaluation per record) over per-pair-side recomputation
-    pre = "l_person_norm" in hydrated.columns and "r_person_norm" in hydrated.columns
-    ln = F.col("l_person_norm") if pre else TX.normalize_name("l_person")
-    rn = F.col("r_person_norm") if pre else TX.normalize_name("r_person")
-    df = hydrated
-    for f in EMBED_FIELDS:
-        if dim <= FUSED_COSINE_MAX_DIM:
-            cos = unit_dot_expr(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"), dim)
-        else:
-            # reference-dimensionality vectors (1536, config.yml:46):
-            # the unrolled expression would blow the codegen method
-            # budget — Arrow-batched einsum is the scale path there
-            cos = S.cosine_udf(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"))
-        df = df.withColumn(f"{f}_cosine", F.coalesce(cos, F.lit(0.0)))
-    df = df.withColumn(
-        "person_jaro_winkler", F.coalesce(S.jaro_winkler_udf(ln, rn), F.lit(0.0))
-    )
-    # native-expression features, identical to the unfused path
-    df = df.withColumn("person_levenshtein", S.levenshtein_sim("l_person", "r_person"))
-    for a, b in [
-        ("person", "title"),
-        ("person", "provision"),
-        ("person", "subjects"),
-        ("title", "subjects"),
-        ("title", "provision"),
-        ("provision", "subjects"),
-    ]:
-        df = df.withColumn(
-            f"{a}_{b}_harmonic",
-            S.harmonic_mean(F.col(f"{a}_cosine"), F.col(f"{b}_cosine")),
-        )
-    df = df.withColumn(
-        "person_subjects_product", S.product(F.col("person_cosine"), F.col("subjects_cosine"))
-    )
-    df = df.withColumn(
-        "composite_subjects_ratio",
-        S.safe_ratio(F.col("composite_cosine"), F.col("subjects_cosine")),
-    )
-    if pre:
-        df = df.withColumn(
-            "person_jaccard", S.token_jaccard(F.col("l_person_tokens"), F.col("r_person_tokens"))
-        )
-        df = df.withColumn(
-            "title_jaccard", S.token_jaccard(F.col("l_title_tokens"), F.col("r_title_tokens"))
-        )
-        df = df.withColumn(
-            "subjects_jaccard",
-            S.token_jaccard(F.col("l_subjects_tokens"), F.col("r_subjects_tokens")),
-        )
-        df = df.withColumn(
-            "low_info_name",
-            F.when(
-                (F.col("l_person_informative") < 2) | (F.col("r_person_informative") < 2),
-                1.0,
-            ).otherwise(0.0),
-        )
-    else:
-        df = df.withColumn("person_jaccard", S.token_jaccard(TX.tokens(ln), TX.tokens(rn)))
-        df = df.withColumn(
-            "title_jaccard",
-            S.token_jaccard(
-                TX.tokens(F.lower(F.col("l_title"))), TX.tokens(F.lower(F.col("r_title")))
-            ),
-        )
-        df = df.withColumn(
-            "subjects_jaccard",
-            S.token_jaccard(
-                TX.tokens(F.lower(F.col("l_subjects"))), TX.tokens(F.lower(F.col("r_subjects")))
-            ),
-        )
-
-        def n_informative(col):
-            return F.coalesce(
-                F.regexp_count(TX.normalize_name(col), F.lit(r"[\p{L}]{3,}")), F.lit(0)
-            )
-
-        df = df.withColumn(
-            "low_info_name",
-            F.when(
-                (n_informative("l_person") < 2) | (n_informative("r_person") < 2), 1.0
-            ).otherwise(0.0),
-        )
-    if "l_person_years" in df.columns and "r_person_years" in df.columns:
-        ly, ry = F.col("l_person_years"), F.col("r_person_years")
-        df = df.withColumn(
-            "year_match",
-            Y.year_match(ly["birth"], ly["death"], ry["birth"], ry["death"]),
-        )
-    else:
-        df = df.withColumn("_ly", Y.extract_years_udf(F.col("l_person"))).withColumn(
-            "_ry", Y.extract_years_udf(F.col("r_person"))
-        )
-        df = df.withColumn(
-            "year_match",
-            Y.year_match(
-                F.col("_ly.birth"), F.col("_ly.death"), F.col("_ry.birth"), F.col("_ry.death")
-            ),
-        ).drop("_ly", "_ry")
-    return df
 
 
 def feature_matrix(
@@ -310,6 +178,8 @@ _STRING_PHASE_COLS = (
     "person_norm", "person_tokens", "title_tokens", "subjects_tokens",
     "person_informative", "person_years",
 )
+# per-field string-hash keys of the distinct-pair cosine dictionary
+_HASH_COLS = tuple(f"{f}_hash" for f in EMBED_FIELDS)
 
 
 def _cosine_interactions(df: DataFrame) -> DataFrame:
@@ -341,7 +211,6 @@ def staged_feature_matrix(
     wide: DataFrame,
     dim: int = 64,
     names: tuple[str, ...] = ALL_FEATURE_NAMES,
-    cosine_strategy: str = "auto",
 ) -> DataFrame:
     """Two-phase pair scoring: (1) hydrate only the STRING/TOKEN columns
     and compute every string feature — Jaro-Winkler (the one Arrow
@@ -349,8 +218,9 @@ def staged_feature_matrix(
     drop the strings; (2) attach the five cosines and their interaction
     features in the top stage.
 
-    Same values as feature_matrix(with_all_features(hydrate_pairs(...)))
-    (tested), different physical plan, two advantages at scale:
+    Same values as the reference with_extra_features(with_features(
+    hydrate_pairs(...))) to float32 unit-norm precision (tested), with
+    a different physical plan that has two advantages at scale:
 
       * the Arrow eval node sits in the cheap string stage; the
         vector stage is pure whole-stage codegen. With single-phase
@@ -365,53 +235,29 @@ def staged_feature_matrix(
         paying for the cosines (cascade scoring).
 
     Requires the records_wide precomputed columns (person_norm, token
-    arrays, years) — the pipeline's records_wide always has them.
+    arrays, years, the per-field ``{f}_hash`` keys) — the pipeline's
+    records_wide always has them.
 
-    ``cosine_strategy``:
-      * ``"dict"`` — compute each field's cosine ONCE per distinct
-        (l_hash, r_hash) string pair and join the small per-field
-        result tables back onto the skinny pair frame. Candidate pairs
-        repeat field strings heavily (measured at 60k records: 235k
-        distinct person pairs / 89k subjects / 398k title / 477k
-        provision vs 2.48M candidate pairs), so this shrinks the dot-
-        product work 5-30x per field AND removes the 5 x dim-term
-        expressions from the hot pair stages entirely (they were the
-        codegen-64KB offender — see the strict-codegen test, which
-        this strategy flips green). The result tables are small enough
-        for Catalyst/AQE to broadcast at test scale and degrade to
-        shuffled joins at web scale. Requires the ``{f}_hash`` columns
-        records_wide emits.
-      * ``"join"`` — hydrate vectors per pair side and evaluate the
-        dot products inline (the round-3 original).
-      * ``"auto"`` — dim-based, from measurement (60k-record fixture,
-        local[8], broadcast off): at dim 64 the fused-codegen inline
-        dots win 2x (97.5k vs 48.2k pairs/s — the dict plan's extra
-        pair-frame shuffle joins cost more than the one interpreted
-        stage they avoid), while at the reference's dim 1536 the dict
-        plan wins 5.2x (7,272 vs 1,386 pairs/s — per-pair vector
-        hydration ships ~61KB/pair and the Arrow cosine UDF runs over
-        every pair instead of every distinct pair). So: "join" when
-        ``dim <= FUSED_COSINE_MAX_DIM``, else "dict" when records_wide
-        carries the per-field ``{f}_hash`` columns, else "join".
+    The cosine plan follows from ``dim`` (measured on the 60k-record
+    fixture, local[8], broadcast off):
+
+      * ``dim <= FUSED_COSINE_MAX_DIM`` — hydrate the unit-norm vectors
+        per pair side and evaluate unrolled dot products inline. At
+        dim 64 this wins 2x (97.5k vs 48.2k pairs/s): the dictionary
+        plan's extra pair-frame shuffle joins cost more than the one
+        interpreted stage they avoid.
+      * above it — the distinct-pair cosine dictionary
+        (_attach_dict_cosines): each field's cosine is computed ONCE
+        per distinct (l_hash, r_hash) string pair with the Arrow
+        cosine UDF and joined back onto the skinny pair frame. At the
+        reference's dim 1536 this wins 5.2x (7,272 vs 1,386 pairs/s):
+        per-pair vector hydration ships ~61KB/pair, and the UDF then
+        runs over distinct pairs instead of every pair.
     """
-    if cosine_strategy not in ("auto", "dict", "join"):
-        raise ValueError(
-            f"cosine_strategy must be 'auto', 'dict' or 'join', got {cosine_strategy!r}"
-        )
-    missing = [c for c in _STRING_PHASE_COLS if c not in wide.columns]
+    missing = [c for c in (*_STRING_PHASE_COLS, *_HASH_COLS) if c not in wide.columns]
     if missing:
         raise ValueError(f"staged_feature_matrix needs records_wide columns, missing: {missing}")
-    hash_cols = [f"{f}_hash" for f in EMBED_FIELDS]
-    has_hashes = all(c in wide.columns for c in hash_cols)
-    strategy = cosine_strategy
-    if strategy == "auto":
-        strategy = "dict" if (dim > FUSED_COSINE_MAX_DIM and has_hashes) else "join"
-    elif strategy == "dict" and not has_hashes:
-        raise ValueError(
-            "cosine_strategy='dict' needs the per-field {f}_hash columns "
-            "records_wide emits; this frame is missing "
-            f"{[c for c in hash_cols if c not in wide.columns]}"
-        )
+    use_dict = dim > FUSED_COSINE_MAX_DIM
     # phase 1: string features over a names-only hydrate. In dict mode
     # the per-field hash keys ride along (10 longs/row — they are join
     # keys, not UDF inputs, so they never transit Arrow).
@@ -420,7 +266,7 @@ def staged_feature_matrix(
     # per-pair compute runs in cand's own partitions, so a cand that
     # arrives as one checkpoint file would score serially.
     cand = ensure_parallelism(cand)
-    carry = hash_cols if strategy == "dict" else []
+    carry = _HASH_COLS if use_dict else ()
     sl = wide.select(
         F.col("record_id").alias("id1"),
         *[F.col(c).alias(f"l_{c}") for c in (*_STRING_PHASE_COLS, *carry)],
@@ -456,8 +302,8 @@ def staged_feature_matrix(
         .alias("low_info_name"),
         Y.year_match(ly["birth"], ly["death"], ry["birth"], ry["death"]).alias("year_match"),
     )
-    if strategy == "dict":
-        df = _attach_dict_cosines(p, cand, wide, dim)
+    if use_dict:
+        df = _attach_dict_cosines(p, cand, wide)
     else:
         # phase 2: vector hydration + codegen cosines on the skinny frame
         vl = wide.select(
@@ -470,30 +316,26 @@ def staged_feature_matrix(
         )
         df = p.join(vl, on="id1").join(vr, on="id2")
         for f in EMBED_FIELDS:
-            if dim <= FUSED_COSINE_MAX_DIM:
-                cos = unit_dot_expr(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"), dim)
-            else:
-                cos = S.cosine_udf(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"))
+            cos = S.unrolled_dot_expr(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"), dim)
             df = df.withColumn(f"{f}_cosine", F.coalesce(cos, F.lit(0.0)))
     return feature_matrix(_cosine_interactions(df), names=names)
 
 
-def _attach_dict_cosines(
-    p: DataFrame, cand: DataFrame, wide: DataFrame, dim: int
-) -> DataFrame:
-    """The distinct-pair cosine dictionary (cosine_strategy='dict').
+def _attach_dict_cosines(p: DataFrame, cand: DataFrame, wide: DataFrame) -> DataFrame:
+    """The distinct-pair cosine dictionary (staged_feature_matrix above
+    FUSED_COSINE_MAX_DIM).
 
     For each embed field: (1) the DISTINCT (l_hash, r_hash) pairs the
     candidates actually realize — built from a skinny hash-only
     hydrate, unpivoted so all five fields dedup in ONE shuffle; (2) a
     per-field hash -> vector dictionary (one row per distinct string);
-    (3) the dot product evaluated once per distinct pair — a SMALL
+    (3) the Arrow cosine UDF evaluated once per distinct pair — a SMALL
     table per field; (4) a left join of each table back onto the pair
     frame on (l_hash, r_hash), NULL (missing string / missing vector)
     coalesced to 0.0 exactly like the inline path.
 
     Scale shape: the per-pair hot stage carries 10 longs instead of
-    10 x dim floats, never evaluates a dot product, and the dot work
+    10 x dim floats, never evaluates a dot product, and the cosine work
     itself shrinks by the string-repeat factor (5-30x measured). The
     per-field cosine tables broadcast under AQE at test scale and
     degrade to shuffled joins at web scale."""
@@ -532,18 +374,18 @@ def _attach_dict_cosines(
             .filter(F.col("_h").isNotNull())
             .dropDuplicates(["_h"])
         )
-        if dim <= FUSED_COSINE_MAX_DIM:
-            cos = unit_dot_expr(F.col("_lv"), F.col("_rv"), dim)
-        else:
-            # reference dimensionality (1536): the Arrow einsum now runs
-            # over distinct pairs only — 5-30x less vector traffic
-            cos = S.cosine_udf(F.col("_lv"), F.col("_rv"))
         ctab = (
             dist.filter(F.col("fld") == f)
             .select(F.col("hl").alias(lh[f]), F.col("hr").alias(rh[f]))
             .join(hv.select(F.col("_h").alias(lh[f]), F.col("_v").alias("_lv")), on=lh[f])
             .join(hv.select(F.col("_h").alias(rh[f]), F.col("_v").alias("_rv")), on=rh[f])
-            .select(lh[f], rh[f], F.coalesce(cos, F.lit(0.0)).alias(f"{f}_cosine"))
+            .select(
+                lh[f],
+                rh[f],
+                F.coalesce(S.cosine_udf(F.col("_lv"), F.col("_rv")), F.lit(0.0)).alias(
+                    f"{f}_cosine"
+                ),
+            )
         )
         df = df.join(ctab, on=[lh[f], rh[f]], how="left")
         # left-join miss = NULL hash on either side = missing field

@@ -404,8 +404,9 @@ def allpairs_threshold_gemm(
     modest n or post-LSH candidate sets — the scale path remains the
     bucketed/grouped variant. Exactness matches
     _grouped_topk_gemm's contract: float64 dot/(|a||b|), 0.0 on zero
-    norms (pair_cosine_expr's convention), ragged/non-finite rows
-    excluded, string ids ordered by UTF-8 bytes (UTF8String order)."""
+    norms (pair_cosine_expr's convention), ragged/non-finite rows and
+    NULL ids excluded, string ids ordered by UTF-8 bytes (UTF8String
+    order)."""
     spark = vectors.sparkSession
     S = n_salts or spark.sparkContext.defaultParallelism or 16
     id_field = next(f for f in vectors.schema.fields if f.name == id_col)
@@ -416,7 +417,9 @@ def allpairs_threshold_gemm(
             T.StructField("cosine", T.DoubleType()),
         ]
     )
-    base = vectors.filter(F.col(vec_col).isNotNull())
+    # a NULL id never satisfies `id1 < id2` in the crossJoin this
+    # replaces, and would break _id_rank_keys' byte ordering
+    base = vectors.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
     right = base.select(
         F.col(id_col).alias("_rid"),
         F.col(vec_col).alias("_v"),

@@ -177,7 +177,7 @@ class ERPipeline:
             return cand
         # staged scoring: string features (incl. the Arrow JW) over
         # a names-only hydrate, then vector hydration + codegen
-        # cosines — same values as the single-phase path (tested),
+        # cosines — same values as the reference features (tested),
         # but the Arrow node never splits the dot-product stage
         # into an over-64KB codegen method (features.py docstring).
         # AQE partition COALESCING is suspended for this stage: pair
@@ -559,10 +559,25 @@ class ERPipeline:
         )
         return labels
 
+    def _labeled_features(
+        self, labels: DataFrame, wide: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """(pair_ids, feat): the labels as (id1, id2, match) and the
+        production feature matrix over their DISTINCT (id1, id2) pairs.
+        Callers join the two on (id1, id2), so a duplicated label row
+        keeps its multiplicity instead of squaring it."""
+        pair_ids = labels.select(
+            F.col("left").alias("id1"), F.col("right").alias("id2"), "match"
+        )
+        feat = features.staged_feature_matrix(
+            pair_ids.select("id1", "id2").distinct(), wide, dim=self.cfg.embedding_dim
+        )
+        return pair_ids, feat
+
     def _score_labeled(self, labels: DataFrame, wide: DataFrame) -> DataFrame:
         """(id1, id2, match, …features…, confidence, is_match) for the
-        labeled ground-truth pairs, scored through the same hydration +
-        feature + classify path as production candidates — the input to
+        labeled ground-truth pairs, scored through the same feature +
+        classify path as production candidates — the input to
         reports.error_analysis.
 
         Hydration is an inner join, so a labeled pair whose record is
@@ -572,12 +587,7 @@ class ERPipeline:
         predicted-False (its documented 'never a candidate' cell) — the
         same coalesce pairwise_metrics applies, so the two reports
         always agree on n_pairs and recall."""
-        pair_ids = labels.select(
-            F.col("left").alias("id1"), F.col("right").alias("id2"), "match"
-        )
-        feat = features.with_all_features(
-            features.hydrate_pairs(pair_ids, wide), dim=self.cfg.embedding_dim
-        )
+        pair_ids, feat = self._labeled_features(labels, wide)
         scored = classify.classify_pairs(
             feat,
             self.model,
@@ -589,19 +599,21 @@ class ERPipeline:
 
     # -- training path ------------------------------------------------------
     def _train(self, labels: DataFrame, wide: DataFrame) -> classify.Model:
-        """J6 hydration: labels ⋈ records_wide twice -> features ->
+        """J6 hydration: labeled pairs -> production features ->
         driver-side deterministic GD (the labeled set is tiny by
-        construction; this is the same scale split the reference makes)."""
-        import numpy as np
+        construction; this is the same scale split the reference makes).
 
-        pair_ids = labels.select(
-            F.col("left").alias("id1"), F.col("right").alias("id2"), "match"
+        The collected rows are sorted by pair before training:
+        classify.train draws its train/val/test split as a seeded
+        permutation of row positions, and toPandas() returns rows in
+        whatever order the physical plan produced them."""
+        pair_ids, feat = self._labeled_features(labels, wide)
+        pdf = (
+            pair_ids.join(feat, on=["id1", "id2"])
+            .select("id1", "id2", *ALL_FEATURE_NAMES, F.col("match").cast("int").alias("y"))
+            .toPandas()
+            .sort_values(["id1", "id2", "y"], kind="mergesort", ignore_index=True)
         )
-        hydrated = features.hydrate_pairs(pair_ids, wide)
-        feat = features.with_all_features(hydrated, dim=self.cfg.embedding_dim).select(
-            *ALL_FEATURE_NAMES, F.col("match").cast("int").alias("y")
-        )
-        pdf = feat.toPandas()
         X = pdf[list(ALL_FEATURE_NAMES)].to_numpy(dtype=float)
         y = pdf["y"].to_numpy(dtype=float)
         model, metrics = classify.train(X, y, self.cfg, feature_names=ALL_FEATURE_NAMES)

@@ -76,64 +76,47 @@ def test_extra_features(spark):
     assert 0.8 < out["person_jaro_winkler"] <= 1.0
 
 
-def test_fused_features_match_unfused(spark, corpus):
-    """The single-Arrow-transit fused scorer must produce byte-identical
-    features to the two-step with_extra_features(with_features(...))
-    path over real hydrated pairs."""
-    from entity_resolution_pipeline_v1_spark.operators import (
-        blocking, extract, pairs, preprocess,
-    )
-    from entity_resolution_pipeline_v1_spark.operators.features import ALL_FEATURE_NAMES
+def _records_and_wide(corpus, dim):
+    from entity_resolution_pipeline_v1_spark.operators import extract, preprocess
     from entity_resolution_pipeline_v1_spark.sources import pages as P
 
-    ext = extract.extract_text(P.pages_view(corpus), mode="main")
-    records = preprocess.parse_records(ext)
-    uniq = preprocess.unique_strings(preprocess.long_form(records))
-    emb = preprocess.embed_unique(uniq, 16)
-    wide = preprocess.records_wide(records, emb)
-    cand = pairs.candidate_pairs(
-        blocking.cap_blocks(blocking.build_blocks(records), 2000)
-    ).limit(200)
-    hydrated = features.hydrate_pairs(cand, wide).cache()
-    cols = ["id1", "id2", *ALL_FEATURE_NAMES]
-    a = features.with_all_features(hydrated, fused=True, dim=16).select(*cols)
-    b = features.with_all_features(hydrated, fused=False).select(*cols)
-    rows_a = {(r["id1"], r["id2"]): r for r in a.collect()}
-    rows_b = {(r["id1"], r["id2"]): r for r in b.collect()}
-    assert rows_a.keys() == rows_b.keys() and rows_a
-    for k in rows_a:
-        for name in ALL_FEATURE_NAMES:
-            # fused dot == cosine up to the float32 unit-norm rounding
-            # of the stored vectors (embedder normalizes in float64,
-            # stores float32)
-            assert rows_a[k][name] == pytest.approx(rows_b[k][name], abs=2e-6), (k, name)
-    hydrated.unpersist()
-
-
-@pytest.mark.parametrize("strategy", ["dict", "join"])
-def test_staged_feature_matrix_matches_single_phase(spark, corpus, strategy):
-    """staged_feature_matrix (two-phase hydration, the pipeline's score
-    stage) must produce the same values as the single-phase
-    with_all_features path over real candidate pairs — under BOTH
-    cosine strategies ('auto' resolves to 'dict': records_wide carries
-    the {f}_hash columns)."""
-    from entity_resolution_pipeline_v1_spark.operators import (
-        blocking, extract, pairs, preprocess,
+    # cached: blocking and records_wide both re-read the records, and
+    # each uncached pass re-runs the Arrow text extraction
+    records = preprocess.parse_records(
+        extract.extract_text(P.pages_view(corpus), mode="main")
+    ).cache()
+    emb = preprocess.embed_unique(
+        preprocess.unique_strings(preprocess.long_form(records)), dim
     )
-    from entity_resolution_pipeline_v1_spark.operators.features import ALL_FEATURE_NAMES
-    from entity_resolution_pipeline_v1_spark.sources import pages as P
+    return records, preprocess.records_wide(records, emb)
 
-    ext = extract.extract_text(P.pages_view(corpus), mode="main")
-    records = preprocess.parse_records(ext)
-    uniq = preprocess.unique_strings(preprocess.long_form(records))
-    emb = preprocess.embed_unique(uniq, 16)
-    wide = preprocess.records_wide(records, emb).cache()
+
+@pytest.mark.parametrize(
+    "dim",
+    [
+        pytest.param(16, id="join"),
+        pytest.param(features.FUSED_COSINE_MAX_DIM + 1, id="dict"),
+    ],
+)
+def test_staged_feature_matrix_matches_single_phase(spark, corpus, dim):
+    """staged_feature_matrix (two-phase hydration, the only production
+    feature path) must match the single-phase reference
+    with_extra_features(with_features(hydrate_pairs(...))) over real
+    candidate pairs under BOTH cosine plans: inline unrolled dots at
+    dim 16, the distinct-pair dictionary above FUSED_COSINE_MAX_DIM."""
+    from entity_resolution_pipeline_v1_spark.operators import blocking, pairs
+    from entity_resolution_pipeline_v1_spark.operators.features import ALL_FEATURE_NAMES
+
+    records, wide = _records_and_wide(corpus, dim)
+    wide = wide.cache()
     cand = pairs.candidate_pairs(
         blocking.cap_blocks(blocking.build_blocks(records), 2000)
     ).limit(300).cache()
-    a = features.staged_feature_matrix(cand, wide, dim=16, cosine_strategy=strategy)
+    a = features.staged_feature_matrix(cand, wide, dim=dim)
     b = features.feature_matrix(
-        features.with_all_features(features.hydrate_pairs(cand, wide), dim=16),
+        features.with_extra_features(
+            features.with_features(features.hydrate_pairs(cand, wide))
+        ),
         names=ALL_FEATURE_NAMES,
     )
     rows_a = {(r["id1"], r["id2"]): r for r in a.collect()}
@@ -141,81 +124,59 @@ def test_staged_feature_matrix_matches_single_phase(spark, corpus, strategy):
     assert rows_a.keys() == rows_b.keys() and rows_a
     for k in rows_a:
         for name in ALL_FEATURE_NAMES:
-            assert rows_a[k][name] == pytest.approx(rows_b[k][name], abs=1e-9), (k, name)
+            # the inline plan's unit-norm dot == the reference's
+            # true-norm cosine up to the float32 rounding of the stored
+            # vectors (embedder normalizes in float64, stores float32)
+            assert rows_a[k][name] == pytest.approx(rows_b[k][name], abs=2e-6), (k, name)
     cand.unpersist()
     wide.unpersist()
 
 
 def test_staged_feature_matrix_strategy_validation(spark, corpus):
-    from entity_resolution_pipeline_v1_spark.operators import extract, preprocess
-    from entity_resolution_pipeline_v1_spark.sources import pages as P
-
-    records = preprocess.parse_records(
-        extract.extract_text(P.pages_view(corpus), mode="main")
-    )
-    emb = preprocess.embed_unique(
-        preprocess.unique_strings(preprocess.long_form(records)), 16
-    )
-    wide = preprocess.records_wide(records, emb)
+    _, wide = _records_and_wide(corpus, 16)
     cand = spark.createDataFrame([("a", "b")], "id1 string, id2 string")
-    with pytest.raises(ValueError, match="cosine_strategy"):
-        features.staged_feature_matrix(cand, wide, dim=16, cosine_strategy="bogus")
-    # explicit 'dict' without the hash columns must refuse, not silently
-    # fall back (the round-3 dead-parameter seam, ADVICE r3-medium)
+    with pytest.raises(ValueError, match="person_norm"):
+        features.staged_feature_matrix(cand, wide.drop("person_norm"), dim=16)
+    # the distinct-pair dictionary's hash keys are required at every dim
     no_hashes = wide.drop(*[f"{f}_hash" for f in features.EMBED_FIELDS])
     with pytest.raises(ValueError, match="_hash"):
-        features.staged_feature_matrix(cand, no_hashes, dim=16, cosine_strategy="dict")
-    # 'auto' without hashes falls back to the inline-join plan
-    assert features.staged_feature_matrix(cand, no_hashes, dim=16).columns
+        features.staged_feature_matrix(cand, no_hashes, dim=16)
 
-    def plan(**kw):
+    def plan(dim):
         return (
-            features.staged_feature_matrix(cand, wide, **kw)
+            features.staged_feature_matrix(cand, wide, dim=dim)
             ._jdf.queryExecution().optimizedPlan().toString()
         )
 
-    # 'auto' is dim-based (measured, see the docstring): small dims keep
-    # the fused inline dots (per-pair vector hydration in the plan) ...
-    assert "l_person_vec" in plan(dim=16)
+    # the plan is dim-based (measured, see the docstring): small dims
+    # keep the inline dots (per-pair vector hydration in the plan) ...
+    assert "l_person_vec" in plan(16)
     # ... above FUSED_COSINE_MAX_DIM it switches to the distinct-pair
     # dictionary: no `{f}_vec` column is ever hydrated per pair
-    assert "l_person_vec" not in plan(dim=features.FUSED_COSINE_MAX_DIM + 1)
-    # explicit 'dict' honors the request at any dim
-    assert "l_person_vec" not in plan(dim=16, cosine_strategy="dict")
+    assert "l_person_vec" not in plan(features.FUSED_COSINE_MAX_DIM + 1)
 
 
 def test_score_stage_compiles_under_strict_codegen(spark, corpus):
-    """Round-3's strict xfail, flipped green by cosine_strategy='dict':
-    the per-pair hot stages carry hash keys instead of vectors and
-    never evaluate a dim-term dot product, so no projection exceeds the
-    JVM's 64KB codegen method limit — the whole score plan compiles
+    """The dictionary plan (dim above FUSED_COSINE_MAX_DIM) compiles
     under spark.sql.codegen.fallback=false (interpreted fallback
-    disabled). 'dict' is requested explicitly: at dim 64 'auto'
-    deliberately keeps the inline-join plan, whose one interpreted
-    stage is 2x cheaper than the dict plan's extra shuffles (measured
-    — see the staged_feature_matrix docstring); this test pins that
-    the strict-codegen-clean plan EXISTS and is what 'auto' selects at
-    reference dimensionality (1536)."""
-    from entity_resolution_pipeline_v1_spark.operators import (
-        blocking, extract, pairs, preprocess,
-    )
-    from entity_resolution_pipeline_v1_spark.sources import pages as P
+    disabled): its per-pair hot stages carry hash keys instead of
+    vectors and never evaluate a dim-term dot product, so no projection
+    exceeds the JVM's 64KB codegen method limit. At dim 64 the inline
+    plan deliberately keeps one interpreted stage, which is 2x cheaper
+    than the dictionary plan's extra shuffles (measured — see the
+    staged_feature_matrix docstring)."""
+    from entity_resolution_pipeline_v1_spark.operators import blocking, pairs
 
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        records = preprocess.parse_records(
-            extract.extract_text(P.pages_view(corpus), mode="main")
-        )
-        emb = preprocess.embed_unique(
-            preprocess.unique_strings(preprocess.long_form(records)), 64
-        )
-        wide = preprocess.records_wide(records, emb)
+        dim = features.FUSED_COSINE_MAX_DIM + 1
+        records, wide = _records_and_wide(corpus, dim)
+        # cached lazily, so the blocking plan still first runs under the
+        # strict conf; the score plan reads it several times
         cand = pairs.candidate_pairs(
             blocking.cap_blocks(blocking.build_blocks(records), 2000)
-        )
-        featured = features.staged_feature_matrix(
-            cand, wide, dim=64, cosine_strategy="dict"
-        )
+        ).cache()
+        featured = features.staged_feature_matrix(cand, wide, dim=dim)
         # parquet write = the pipeline's real score-stage sink; a bare
         # count() would let Catalyst prune the cosine projections away
         import tempfile
@@ -229,50 +190,65 @@ def test_score_stage_compiles_under_strict_codegen(spark, corpus):
 
 def test_reference_dim_1536_cosine_path(spark):
     """At the reference's embedding dimensionality (1536, reference
-    config.yml:46) the fused path must auto-switch cosines to the
-    Arrow einsum UDF — the 5x1536-term unrolled expression would blow
-    the JVM's 64KB codegen method budget — and the values must match
-    numpy to float32 precision."""
-    import numpy as np
+    config.yml:46) staged_feature_matrix takes the distinct-pair
+    dictionary with the Arrow einsum cosine — the 5x1536-term unrolled
+    expression would blow the JVM's 64KB codegen method budget — and
+    its cosines must match numpy to float32 precision, with a missing
+    field string scoring 0.0."""
+    from entity_resolution_pipeline_v1_spark.config import EMBED_FIELDS
+    from entity_resolution_pipeline_v1_spark.operators import preprocess
 
     assert features.FUSED_COSINE_MAX_DIM < 1536
-    rng = np.random.RandomState(7)
-    dim, n = 1536, 20
-    def unit(v):
-        return (v / np.linalg.norm(v)).astype(np.float32).tolist()
-    rows, expect = [], []
-    for i in range(n):
-        lv = {f: rng.randn(dim) for f in ("composite", "person", "title", "provision", "subjects")}
-        rv = {f: rng.randn(dim) for f in lv}
-        row = {"id1": f"a{i}", "id2": f"b{i}",
-               "l_person": "Smith, John", "r_person": "Smith, Jon",
-               "l_title": "T", "r_title": "T", "l_provision": "P", "r_provision": "P",
-               "l_subjects": "Math", "r_subjects": "Math"}
-        for f in lv:
-            row[f"l_{f}_vec"] = unit(lv[f])
-            row[f"r_{f}_vec"] = unit(rv[f])
-        rows.append(tuple(row.values()))
-        expect.append({
-            f: float(np.dot(row[f"l_{f}_vec"], row[f"r_{f}_vec"])
-                     / (np.linalg.norm(row[f"l_{f}_vec"]) * np.linalg.norm(row[f"r_{f}_vec"])))
-            for f in lv
-        })
-    schema = (
-        "id1 string, id2 string, l_person string, r_person string, l_title string,"
-        " r_title string, l_provision string, r_provision string, l_subjects string,"
-        " r_subjects string,"
-        + ",".join(
-            f" l_{f}_vec array<float>, r_{f}_vec array<float>"
-            for f in ("composite", "person", "title", "provision", "subjects")
-        )
+    dim, n = 1536, 12
+    # strings repeat across records (title/subjects/provision), so the
+    # dictionary dedups pairs; record r3 has no provision
+    recs = [
+        (f"r{i}", f"Person {i}, Name {i % 5}", f"Title {i % 4}",
+         None if i == 3 else f"Place {i % 3}", f"Subject {i % 2}")
+        for i in range(n)
+    ]
+    records = spark.createDataFrame(
+        recs, "record_id string, person string, title string, provision string,"
+        " subjects string",
+    ).withColumn(
+        "composite",
+        F.concat_ws(" | ", "person", "title", "provision", "subjects"),
     )
-    hydrated = spark.createDataFrame(rows, schema)
-    out = features.with_all_features(hydrated, fused=True, dim=dim)
-    got = {r["id1"]: r for r in out.collect()}
-    assert len(got) == n
-    for i in range(n):
-        for f in ("composite", "person", "title", "provision", "subjects"):
-            assert got[f"a{i}"][f"{f}_cosine"] == pytest.approx(expect[i][f], abs=1e-6), (i, f)
+    uniq = sorted(
+        (r["field"], r["hash"])
+        for r in preprocess.unique_strings(preprocess.long_form(records)).collect()
+    )
+    rng = np.random.RandomState(7)
+    unit = [rng.randn(dim) for _ in uniq]
+    emb = spark.createDataFrame(
+        [(h, f, (v / np.linalg.norm(v)).astype(np.float32).tolist())
+         for (f, h), v in zip(uniq, unit)],
+        "hash string, field string, vector array<float>",
+    )
+    wide = preprocess.records_wide(records, emb)
+    cand = spark.createDataFrame(
+        [(f"r{i}", f"r{j}") for i in range(n) for j in range(i + 1, n) if (i + j) % 3 == 0],
+        "id1 string, id2 string",
+    )
+    featured = features.staged_feature_matrix(cand, wide, dim=dim)
+    assert "l_person_vec" not in featured._jdf.queryExecution().optimizedPlan().toString()
+    got = {(r["id1"], r["id2"]): r for r in featured.collect()}
+    assert len(got) == cand.count()
+
+    vecs = {
+        r["record_id"]: {f: r[f"{f}_vec"] for f in EMBED_FIELDS}
+        for r in wide.select("record_id", *[f"{f}_vec" for f in EMBED_FIELDS]).collect()
+    }
+    for (a, b), row in got.items():
+        for f in EMBED_FIELDS:
+            va, vb = vecs[a][f], vecs[b][f]
+            want = 0.0
+            if va is not None and vb is not None:
+                va, vb = np.asarray(va, np.float64), np.asarray(vb, np.float64)
+                want = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
+            assert row[f"{f}_cosine"] == pytest.approx(want, abs=1e-6), (a, b, f)
+    r3 = [row for (a, b), row in got.items() if "r3" in (a, b)]
+    assert r3 and all(row["provision_cosine"] == 0.0 for row in r3)
 
 
 def test_golden_score_expr_matches_numpy(spark):

@@ -551,7 +551,7 @@ def test_embedding_near_dup_gemm_matches_expression_crossjoin(spark):
     rounded cosine) rows as the old crossJoin + pair_cosine_expr shape
     — including zero-norm vectors (cosine 0.0 by convention), NULL
     vectors (excluded), threshold-boundary pairs, and string ids
-    (UTF-8 byte order for id1 < id2)."""
+    (UTF-8 byte order for id1 < id2) and NULL ids (excluded)."""
     import random
 
     from entity_resolution_pipeline_v1_spark.functions.similarity import (
@@ -574,6 +574,7 @@ def test_embedding_near_dup_gemm_matches_expression_crossjoin(spark):
             rows.append((f"dup_{i:03d}", w))
     rows.append(("zzz_zero", [0.0] * dim))
     rows.append(("zzz_null", None))
+    rows.append((None, rows[0][1]))  # NULL id: never in an id1 < id2 pair
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
     thr = 0.6
 

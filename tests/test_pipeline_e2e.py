@@ -200,6 +200,19 @@ def test_exact_duplicate_flood_forms_flagged_cluster(spark, tmp_path_factory):
     assert (agg["n"], agg["k"], agg["ovr"]) == (200, 1, 1)
 
 
+def test_train_does_not_depend_on_partitioning(run, spark, labeled):
+    # classify.train splits rows by a seeded permutation of positions,
+    # so _train must present the same labels in the same row order
+    # however the labeled frame happens to be partitioned
+    pipe, _labels, work = run
+    wide = spark.read.parquet(os.path.join(work, "stage=records_wide"))
+    fresh = ERPipeline(spark, pipe.cfg)
+    m1 = fresh._train(labeled.repartition(7), wide)
+    m2 = fresh._train(labeled.coalesce(1), wide)
+    assert m1.weights == m2.weights
+    assert m1.bias == m2.bias
+
+
 def test_score_labeled_keeps_pairs_with_missing_records(run, spark, labeled):
     # a labeled pair whose record never made it into records_wide
     # (failed parse / never ingested) must NOT silently vanish from the

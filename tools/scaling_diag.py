@@ -126,14 +126,10 @@ def _full_scored(spark, fixture_dir: str):
 
     from entity_resolution_pipeline_v1_spark.config import PipelineConfig
     from entity_resolution_pipeline_v1_spark.operators import classify, features
-    from entity_resolution_pipeline_v1_spark.operators.features import ALL_FEATURE_NAMES
 
     cfg = PipelineConfig()
     cand, wide = _score_frames(spark, fixture_dir)
-    featured = features.feature_matrix(
-        features.with_all_features(features.hydrate_pairs(cand, wide), dim=cfg.embedding_dim),
-        names=ALL_FEATURE_NAMES,
-    )
+    featured = features.staged_feature_matrix(cand, wide, dim=cfg.embedding_dim)
     return classify.classify_pairs(
         featured, classify.Model.golden(), cfg, year_match_col=F.col("year_match")
     )
@@ -163,6 +159,7 @@ def mode_cos(spark, cpus: int, fixture_dir: str) -> tuple[int, float]:
     from pyspark.sql import functions as F
 
     from entity_resolution_pipeline_v1_spark.config import EMBED_FIELDS
+    from entity_resolution_pipeline_v1_spark.functions import similarity as S
     from entity_resolution_pipeline_v1_spark.operators import features
 
     cand, wide = _score_frames(spark, fixture_dir)
@@ -171,7 +168,7 @@ def mode_cos(spark, cpus: int, fixture_dir: str) -> tuple[int, float]:
         df = df.withColumn(
             f"{f}_cosine",
             F.coalesce(
-                features.unit_dot_expr(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"), 64),
+                S.unrolled_dot_expr(F.col(f"l_{f}_vec"), F.col(f"r_{f}_vec"), 64),
                 F.lit(0.0),
             ),
         )
